@@ -75,33 +75,11 @@ def cosine_sim_col(vec: Column, query: list[float]) -> Column:
 # per ~10k-row batch, ~100× the interpreted throughput, and the 100 TB
 # path (executor-side, no shuffle added, batch size bounded by
 # spark.sql.execution.arrow.maxRecordsPerBatch).
+#
+# Each UDF stacks its batch inline: a module-level helper would make
+# cloudpickle serialize the UDF by reference to this package, which
+# Python workers launched by an external harness cannot import.
 # ---------------------------------------------------------------------------
-
-
-def _stack(s: pd.Series) -> np.ndarray:
-    # NOTE: deliberately re-defined inside each UDF closure below — a
-    # module-level helper would make cloudpickle serialize the UDF by
-    # reference to this package, which Python workers launched by an
-    # external harness cannot import.
-    return np.stack(s.to_numpy()).astype(np.float64, copy=False)
-
-
-def cosine_pair_udf() -> Column:
-    """pandas_udf (va, vb) → cosine similarity, rowwise over a batch."""
-
-    @pandas_udf("double")
-    def cos(va: pd.Series, vb: pd.Series) -> pd.Series:
-        if len(va) == 0:
-            return pd.Series(np.empty(0, dtype=np.float64))
-        stack = lambda s: np.stack(s.to_numpy()).astype(np.float64, copy=False)  # noqa: E731
-        a, b = stack(va), stack(vb)
-        num = np.einsum("ij,ij->i", a, b)
-        den = np.sqrt(np.einsum("ij,ij->i", a, a)) * np.sqrt(
-            np.einsum("ij,ij->i", b, b)
-        )
-        return pd.Series(num / den)
-
-    return cos
 
 
 def cosine_lit_udf(query: list[float]):
@@ -136,17 +114,6 @@ def assign_cell_udf(centroids: list[tuple[int, list[float]]]):
         return pd.Series(ids[np.argmin(d2, axis=1)])
 
     return cell
-
-
-def sqdist_col(a: Column, b: Column) -> Column:
-    """Squared euclidean distance, sequential order (no sqrt — it's
-    only ever compared, and dropping it keeps cross-engine argmins
-    bit-stable)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
 
 
 def topk_scored(

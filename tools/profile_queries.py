@@ -1,12 +1,12 @@
 #!/usr/bin/env python
-"""Round-13 optimization profiler: for each named query, capture the
-physical plan (``explain("formatted")``) into plans/r14/<id>_<tag>.txt
-and time the noop-sink execution (best of N, same methodology as
+"""Optimization profiler: for each named query, capture the physical
+plan (``explain("formatted")``) into <plans_dir>/<id>_<tag>.txt and
+time the noop-sink execution (best of N, same methodology as
 bench.py:run_set), reporting wall seconds and the number of Spark jobs
 the query scheduled (sequential-action shapes show up as job count).
 
 Usage:
-    python tools/profile_r14.py [--tag before|after] [--runs 2] q_a q_b ...
+    python tools/profile_queries.py plans/r15 [--tag before|after] [--runs 2] q_a q_b ...
 
 Timing here is for ITERATION ONLY (relative before/after on the same
 host, same session); the recording of record stays bench.py's.
@@ -41,22 +41,18 @@ def main() -> None:
         i = args.index("--runs")
         runs = int(args[i + 1])
         del args[i : i + 2]
-    names = args
-    if not names:
-        raise SystemExit("usage: profile_r14.py [--tag t] [--runs n] q_a ...")
+    if len(args) < 2:
+        raise SystemExit("usage: profile_queries.py PLANS_DIR [--tag t] [--runs n] q_a ...")
+    out_dir, names = args[0], args[1:]
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans", "r14",
-    )
     os.makedirs(out_dir, exist_ok=True)
 
     from opl_spark import workload
     from opl_spark.session import get_spark
     from opl_spark.sources import TABLES, load_table
 
-    spark = get_spark(app_name=f"opl-profile-r14-{tag}")
+    spark = get_spark(app_name=f"opl-profile-{tag}")
     qs = workload.queries()
     # warm-up: parquet footers + codegen, as in bench.run_set
     for t in TABLES:
